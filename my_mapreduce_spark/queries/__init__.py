@@ -24,4 +24,3 @@ del _mod
 import my_mapreduce_spark.multimodal  # noqa: F401,E402
 import my_mapreduce_spark.streaming.jobs  # noqa: F401,E402
 import my_mapreduce_spark.streaming.stateful  # noqa: F401,E402
-import my_mapreduce_spark.streaming.tws  # noqa: F401,E402

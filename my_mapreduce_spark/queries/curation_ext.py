@@ -562,8 +562,8 @@ def q_curation_endgame(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage is the production operator it names
     (q_quality_score's rational, q_dedup_normalized_exact's hash,
     exact_jaccard_pairs' prefix+positional+suffix funnel,
-    q_dedup_clusters' fixpoint, q_dedup_cluster_reps' window,
-    q_sample_stratified's hash predicate) — this query is the proof
+    min_label_cc (q_dedup_clusters' fixpoint), q_dedup_cluster_reps'
+    window, q_sample_stratified's hash predicate) — this query is the proof
     they CHAIN: the DuckDB oracle recomputes the whole funnel
     including the recursive-CTE fixpoint and must match the final
     row set bit-for-bit, not just the counts.
@@ -581,11 +581,9 @@ def q_curation_endgame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _endgame_survivors(spark, sf_dir).persist()
     pairs, sets = exact_jaccard_pairs(spark, sf_dir, docs=d)
-    # min_label_cc materializes the pair relation into its edge
-    # checkpoint on the first round's count, after which the shingle
-    # cache is dead weight
-    labels = min_label_cc(spark, pairs.select("doc_a", "doc_b"))
-    sets.unpersist()
+    # once min_label_cc has checkpointed its edges, the shingle cache
+    # is dead weight
+    labels = min_label_cc(spark, pairs, release=(sets,))
     return _endgame_tail(d, _endgame_removed(d, labels))
 
 
@@ -600,19 +598,12 @@ def q_curation_endgame(spark: SparkSession, sf_dir: str) -> DataFrame:
          "executed-AQE pass shows the stage-by-stage row collapse.")
 def _q_curation_endgame_audit(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
-    from my_mapreduce_spark.queries.dedup import exact_jaccard_pairs
+    from my_mapreduce_spark.queries.dedup import (_cc_edges, _cc_seed,
+                                                  _min_label_step,
+                                                  exact_jaccard_pairs)
 
     d = _endgame_survivors(spark, sf_dir)
     pairs, _sets = exact_jaccard_pairs(spark, sf_dir, docs=d)
-    near = pairs.select("doc_a", "doc_b")
-    edges = near.union(near.select("doc_b", "doc_a")).toDF("src", "dst")
-    nodes = edges.select(F.col("src").alias("doc_id")).distinct()
-    prop = (edges.join(nodes.withColumn("cluster_id", F.col("doc_id")),
-                       edges.src == F.col("doc_id"))
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.min("cluster_id").alias("nbr_min")))
-    labels = (nodes.join(prop, "doc_id", "left")
-              .select("doc_id",
-                      F.least("doc_id", F.coalesce("nbr_min", "doc_id"))
-                      .alias("cluster_id")))
+    edges = _cc_edges(pairs)
+    labels = _min_label_step(edges, _cc_seed(edges)).drop("chg")
     return _endgame_tail(d, _endgame_removed(d, labels))

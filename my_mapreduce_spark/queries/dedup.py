@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from my_mapreduce_spark.functions.text import minhash_expr, shingles, tokens
 from my_mapreduce_spark.io import load_table, widen_unsplittable_scan
 from my_mapreduce_spark.registry import register, register_audit_plan
+from my_mapreduce_spark.session import scoped_shuffle
 
 _N_MINHASH = 9          # 3 bands x 3 rows
 _BANDS = ((0, 1, 2), (3, 4, 5), (6, 7, 8))
@@ -810,66 +811,82 @@ def q_dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("rn"))
 
 
-_CC_SHUFFLE_ENV = "SPARK_GRAFT_CC_SHUFFLE"
+_CC_MAX_ROUNDS = 20  # near-dup components (small cliques) need 2-3
 
 
-def _scoped_shuffle(spark: SparkSession, n_default: int = 8):
-    """Context manager: temporarily size shuffle partitions for the
-    CC iteration rounds. The label/edge relations are PAIRS-graph-
-    sized — orders of magnitude smaller than the corpus that
-    produced them — so corpus-sized shuffle widths just buy
-    per-round scheduler overhead (the dominant cost of an iterative
-    job on a small graph). The edge skeleton itself is materialized
-    BEFORE entering this scope, under full parallelism. Override
-    with SPARK_GRAFT_CC_SHUFFLE; at 100 TB set it to the graph's
-    size, not the corpus's.
-    """
-    import contextlib
-    import os
-
-    @contextlib.contextmanager
-    def scope():
-        n = os.environ.get(_CC_SHUFFLE_ENV, str(n_default))
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", n)
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
-
-    return scope()
+def _cc_edges(pairs: DataFrame) -> DataFrame:
+    """Both orientations of every (doc_a, doc_b) pair, as (src, dst)."""
+    return (pairs.select("doc_a", "doc_b")
+            .union(pairs.select("doc_b", "doc_a")).toDF("src", "dst"))
 
 
-def min_label_cc(spark: SparkSession, near: DataFrame,
-                 max_rounds: int = 20) -> DataFrame:
-    """Connected components over a (doc_a, doc_b) pair relation by
-    min-label propagation — the q_dedup_clusters loop, reusable:
-    labels converge to each component's smallest doc_id. Per-round
-    eager ``localCheckpoint`` (labels is referenced twice per round;
-    a cache would still grow a doubling logical tree — the
-    q_kcore_peel finding), driver reads ONE changed-count scalar per
-    round, and non-convergence raises instead of emitting wrong
-    labels. Returns (doc_id, cluster_id) for CLUSTERED docs only."""
-    edges = (near.select("doc_a", "doc_b")
-             .union(near.select("doc_b", "doc_a"))
-             .toDF("src", "dst").localCheckpoint(eager=True))
-    labels = (edges.select(F.col("src").alias("doc_id")).distinct()
-              .withColumn("cluster_id", F.col("doc_id")))
+def _cc_seed(edges: DataFrame) -> DataFrame:
+    """Round-0 labels: every node of the edge relation labels itself."""
+    return (edges.select(F.col("src").alias("doc_id")).distinct()
+            .withColumn("cluster_id", F.col("doc_id")))
+
+
+def _min_label_step(edges: DataFrame, labels: DataFrame) -> DataFrame:
+    """One min-label round: every node takes the smallest of its own
+    and its neighbours' labels. One join + one min-agg (both
+    key-colocated shuffles); the change flag rides along (a label
+    only ever decreases), so convergence costs a count over the
+    materialized round instead of a second new-vs-old join."""
+    prop = (edges.join(labels, edges.src == labels.doc_id)
+            .groupBy(F.col("dst").alias("doc_id"))
+            .agg(F.min("cluster_id").alias("nbr_min")))
+    nbr = F.coalesce("nbr_min", "cluster_id")
+    return (labels.join(prop, "doc_id", "left")
+            .select("doc_id", F.least("cluster_id", nbr).alias("cluster_id"),
+                    (nbr < F.col("cluster_id")).alias("chg")))
+
+
+def _pointer_jump_step(edges: DataFrame, labels: DataFrame) -> DataFrame:
+    """A min-label round, then POINTER JUMPING: every label is replaced
+    by its label's label (labels are doc_ids, so the parent's label
+    is one equi-join away). That squares the propagation distance,
+    so convergence takes O(log diameter) rounds instead of
+    O(diameter)."""
+    hop = _min_label_step(edges, labels).toDF("doc_id", "h", "hop_chg")
+    parent = hop.select(F.col("doc_id").alias("h"),
+                        F.col("h").alias("parent_label"))
+    jumped = F.least("h", F.coalesce("parent_label", "h"))
+    return (hop.join(parent, "h", "left")
+            .select("doc_id", jumped.alias("cluster_id"),
+                    (F.col("hop_chg") | (jumped < F.col("h"))).alias("chg")))
+
+
+def min_label_cc(spark: SparkSession, pairs: DataFrame,
+                 step=_min_label_step, release=()) -> DataFrame:
+    """Connected components over a (doc_a, doc_b) pair relation:
+    labels converge to each component's smallest doc_id. ``step`` is
+    one round, ``(edges, labels) -> (doc_id, cluster_id, chg)``;
+    ``release`` lists upstream caches to unpersist once the edges
+    are checkpointed. Returns (doc_id, cluster_id) for CLUSTERED
+    docs only.
+
+    The edge skeleton is localCheckpoint'ed (eager), NOT cached:
+    unpersisting the generator's caches CASCADES to caches whose
+    plans depend on them, so a cached skeleton would silently drop
+    and every round would re-run the pair generator (measured 6.1 s
+    -> 19.9 s on the pointer-jump step). Each round is also
+    localCheckpoint'ed (labels is referenced twice per round; a
+    cache would still grow a doubling logical tree for analysis to
+    re-walk — the q_kcore_peel finding). The rounds shuffle
+    pairs-graph-sized relations, so they run at
+    SPARK_GRAFT_CC_SHUFFLE partitions (default 8), sized to the
+    graph, not the corpus. The driver reads ONE changed-count
+    scalar per round, and non-convergence raises instead of
+    emitting wrong labels."""
+    edges = _cc_edges(pairs).localCheckpoint(eager=True)
+    for df in release:
+        df.unpersist()
+    labels = _cc_seed(edges)
     changed = -1
     try:
-        with _scoped_shuffle(spark):  # graph-sized rounds, not corpus
-            for _ in range(max_rounds):
-                prop = (edges.join(labels, edges.src == labels.doc_id)
-                        .groupBy(F.col("dst").alias("doc_id"))
-                        .agg(F.min("cluster_id").alias("nbr_min")))
-                new = (labels.join(prop, "doc_id", "left")
-                       .select("doc_id",
-                               F.least("cluster_id",
-                                       F.coalesce("nbr_min", "cluster_id"))
-                               .alias("cluster_id"),
-                               (F.coalesce("nbr_min", "cluster_id")
-                                < F.col("cluster_id")).alias("chg"))
-                       .localCheckpoint(eager=True))
+        with scoped_shuffle(spark, "SPARK_GRAFT_CC_SHUFFLE"):
+            for _ in range(_CC_MAX_ROUNDS):
+                new = step(edges, labels).localCheckpoint(eager=True)
                 changed = new.where("chg").count()
                 labels = new.drop("chg")
                 if changed == 0:
@@ -878,8 +895,8 @@ def min_label_cc(spark: SparkSession, near: DataFrame,
         edges.unpersist()
     if changed != 0:
         raise RuntimeError(
-            f"min_label_cc: not converged in {max_rounds} rounds "
-            f"({changed} labels still changing)")
+            f"min_label_cc: {step.__name__} did not converge in "
+            f"{_CC_MAX_ROUNDS} rounds ({changed} labels still changing)")
     return labels
 
 
@@ -928,46 +945,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # pairs via the production ppjoin generator (value-identical to
     # the brute-force join, 22.7x vs 27.9x amplification — the round-8
-    # suffix filter made it strictly cheaper for every consumer);
-    # setup shared with the first-round audit plan so the audited
-    # plan cannot drift from the shipped one
-    edges, labels = _cc_edges_and_labels(spark, sf_dir)
-    changed = -1
-    with _scoped_shuffle(spark):  # rounds shuffle graph-sized relations
-        for _ in range(20):  # >= diameter; breaks as soon as converged
-            prop = (edges.join(labels, edges.src == labels.doc_id)
-                    .groupBy(F.col("dst").alias("doc_id"))
-                    .agg(F.min("cluster_id").alias("nbr_min")))
-            # the change flag is derivable in the same pass (a label only
-            # ever decreases), so convergence costs a count over the
-            # materialized relation instead of a second new-vs-old join.
-            # localCheckpoint (eager), not cache: labels feeds BOTH the
-            # propagation join and the merge, so a cached round still
-            # accumulates a doubling logical tree that analysis re-walks
-            # before every cache hit (the q_kcore_peel finding);
-            # truncation keeps each round's plan edge-sized. Blocks are
-            # O(nodes) x 3 cols per round, released by the harness
-            # release_caches(force_checkpointed=True) contract.
-            new = (labels.join(prop, "doc_id", "left")
-                   .select("doc_id",
-                           F.least("cluster_id", F.coalesce("nbr_min", "cluster_id"))
-                           .alias("cluster_id"),
-                           (F.coalesce("nbr_min", "cluster_id") < F.col("cluster_id"))
-                           .alias("chg"))
-                   .localCheckpoint(eager=True))
-            changed = new.where("chg").count()
-            labels = new.drop("chg")
-            if changed == 0:
-                break
-    edges.unpersist()
-    if changed != 0:
-        # a silent return here would emit WRONG cluster labels for any
-        # component whose diameter exceeds the round cap
-        raise RuntimeError(
-            "q_dedup_clusters: label propagation did not converge in 20 "
-            f"rounds ({changed} labels still changing); raise the round cap "
-            "for graphs with long chain components")
-    return labels
+    # suffix filter made it strictly cheaper for every consumer)
+    jpairs, jsets = exact_jaccard_pairs(spark, sf_dir)
+    return min_label_cc(spark, jpairs, release=(jsets,))
 
 
 @register(
@@ -989,70 +969,18 @@ def q_dedup_clusters_pj(spark: SparkSession, sf_dir: str) -> DataFrame:
     is two key-colocated joins + one min-agg; the driver still sees
     only a changed-row count.
     """
-    # setup shared with the first-round audit plan (no drift); eager
-    # localCheckpoint throughout the doubling loop (not cache): hop is
-    # referenced TWICE per round (the merge and its own parent
-    # lookup), so a cached round still leaves a doubling logical tree
-    # for analysis to re-walk before any cache hit (the q_kcore_peel
-    # finding); truncation keeps every round's plan edge-sized
-    edges, labels0 = _cc_edges_and_labels(spark, sf_dir)
-    labels = labels0.localCheckpoint(eager=True)
-    changed = -1
-    with _scoped_shuffle(spark):  # rounds shuffle graph-sized relations
-        for _ in range(10):  # O(log diameter); breaks once converged
-            # (a) 1-hop min over neighbors' labels
-            prop = (edges.join(labels, edges.src == labels.doc_id)
-                    .groupBy(F.col("dst").alias("doc_id"))
-                    .agg(F.min("cluster_id").alias("nbr_min")))
-            hop = (labels.join(prop, "doc_id", "left")
-                   .select("doc_id", F.col("cluster_id").alias("old_label"),
-                           F.least("cluster_id", F.coalesce("nbr_min", "cluster_id"))
-                           .alias("h")))
-            # (b) pointer jump: label <- label[label]  (labels are doc_ids,
-            # so the parent's label is one equi-join away); the change
-            # flag rides along since labels only ever decrease
-            parent = hop.select(F.col("doc_id").alias("h"),
-                                F.col("h").alias("parent_label"))
-            new = (hop.join(parent, "h", "left")
-                   .select("doc_id",
-                           F.least("h", F.coalesce("parent_label", "h"))
-                           .alias("cluster_id"),
-                           (F.least("h", F.coalesce("parent_label", "h"))
-                            < F.col("old_label")).alias("chg"))
-                   .localCheckpoint(eager=True))
-            changed = new.where("chg").count()
-            labels = new.drop("chg")
-            if changed == 0:
-                break
-    edges.unpersist()
-    if changed != 0:
-        raise RuntimeError(
-            "q_dedup_clusters_pj: did not converge in 10 doubling rounds "
-            f"({changed} labels still changing) — component diameter > 2^10")
-    return labels
-
-
-def _cc_edges_and_labels(spark: SparkSession,
-                         sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """The CC loops' shared setup, reused by the first-round audit
-    plans: checkpointed edge skeleton + initial self-labels.
-
-    localCheckpoint (eager), NOT cache+count, for the skeleton:
-    unpersisting the generator's shingle cache CASCADES to caches
-    whose plans depend on it (Spark's correctness-preserving
-    cascade), so a cached edge skeleton would silently drop and every
-    CC round would re-run the full generator (measured 6.1 s ->
-    19.9 s on the pj variant). Checkpointing truncates the lineage
-    first, making the release safe; the blocks are pairs-sized."""
     jpairs, jsets = exact_jaccard_pairs(spark, sf_dir)
-    pairs = jpairs.select("doc_a", "doc_b")
-    edges = (pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a")))
-             .toDF("src", "dst").localCheckpoint(eager=True))
+    return min_label_cc(spark, jpairs, _pointer_jump_step, release=(jsets,))
+
+
+def _cc_round1(spark: SparkSession, sf_dir: str, step) -> DataFrame:
+    """Round 1 of a CC step over the checkpointed edge skeleton,
+    built exactly as min_label_cc builds it: the audit plans of the
+    cluster queries."""
+    jpairs, jsets = exact_jaccard_pairs(spark, sf_dir)
+    edges = _cc_edges(jpairs).localCheckpoint(eager=True)
     jsets.unpersist()
-    labels = (edges.select(F.col("src").alias("doc_id"))
-              .distinct()
-              .withColumn("cluster_id", F.col("doc_id")))
-    return edges, labels
+    return step(edges, _cc_seed(edges))
 
 
 @register_audit_plan(
@@ -1065,17 +993,7 @@ def _cc_edges_and_labels(spark: SparkSession,
          "over relations of non-increasing size.")
 def _q_dedup_clusters_round1(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
-    edges, labels = _cc_edges_and_labels(spark, sf_dir)
-    prop = (edges.join(labels, edges.src == labels.doc_id)
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.min("cluster_id").alias("nbr_min")))
-    return (labels.join(prop, "doc_id", "left")
-            .select("doc_id",
-                    F.least("cluster_id",
-                            F.coalesce("nbr_min", "cluster_id"))
-                    .alias("cluster_id"),
-                    (F.coalesce("nbr_min", "cluster_id")
-                     < F.col("cluster_id")).alias("chg")))
+    return _cc_round1(spark, sf_dir, _min_label_step)
 
 
 @register_audit_plan(
@@ -1085,23 +1003,7 @@ def _q_dedup_clusters_round1(spark: SparkSession,
          "same setup sharing as q_dedup_clusters.")
 def _q_dedup_clusters_pj_round1(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
-    edges, labels = _cc_edges_and_labels(spark, sf_dir)
-    prop = (edges.join(labels, edges.src == labels.doc_id)
-            .groupBy(F.col("dst").alias("doc_id"))
-            .agg(F.min("cluster_id").alias("nbr_min")))
-    hop = (labels.join(prop, "doc_id", "left")
-           .select("doc_id", F.col("cluster_id").alias("old_label"),
-                   F.least("cluster_id",
-                           F.coalesce("nbr_min", "cluster_id"))
-                   .alias("h")))
-    parent = hop.select(F.col("doc_id").alias("h"),
-                        F.col("h").alias("parent_label"))
-    return (hop.join(parent, "h", "left")
-            .select("doc_id",
-                    F.least("h", F.coalesce("parent_label", "h"))
-                    .alias("cluster_id"),
-                    (F.least("h", F.coalesce("parent_label", "h"))
-                     < F.col("old_label")).alias("chg")))
+    return _cc_round1(spark, sf_dir, _pointer_jump_step)
 
 
 @register(
@@ -2275,9 +2177,10 @@ def q_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     any hot shingle). Verification sides are semi-pruned and
     merge-hinted (never broadcast: the 30x tier OOM'd on
     AQE's auto-broadcast of the compressed-tiny/deserialized-huge
-    array relation). The CC loop is the same min-label propagation
-    with O(1-scalar) driver reads per round. Funnel counts reach
-    the driver as O(stages) integers.
+    array relation). The CC rounds are min_label_cc's, with
+    O(1-scalar) driver reads per round and a raise on
+    non-convergence. Funnel counts reach the driver as O(stages)
+    integers.
     """
     docs = load_table(spark, sf_dir, "documents")
     norm = F.md5(F.trim(F.regexp_replace(
@@ -2382,55 +2285,19 @@ def q_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
                    / (F.col("na") + F.col("nb") - F.col("n_common"))
                    >= _FUNNEL_JACCARD)
             .select("doc_a", "doc_b"))
-    # localCheckpoint (eager), NOT persist: the q_dedup_clusters
-    # lesson applied to the funnel's inline edge skeleton. A merely
-    # persisted edges relation keeps the ENTIRE funnel DAG (shingle
-    # pipeline, suffix bitmaps, verification joins) in its lineage,
-    # and every CC round + the final label agg re-ANALYZES that tree
-    # before the cache lookup can hit — a pure plan-CONSTANT cost
-    # (measured ~11 s of the funnel's ~17 s warm wall at sf0.1 for a
-    # 482-edge graph). Truncating lineage first makes each round's
-    # plan edge-sized and lets the upstream caches release NOW
-    # instead of after the loop (no cascade risk — the checkpoint
-    # blocks, pairs-sized, are all the loop references).
-    edges = (near.union(near.select(F.col("doc_b"), F.col("doc_a")))
-             .toDF("src", "dst").localCheckpoint(eager=True))
-    sets.unpersist()
-    sh.unpersist()
-    survivors.unpersist()
-    groups.unpersist()
-    try:
-        labels = (edges.select(F.col("src").alias("doc_id")).distinct()
-                  .withColumn("cluster_id", F.col("doc_id")))
-        with _scoped_shuffle(spark):
-            # per-round eager localCheckpoint (not cache): labels is
-            # referenced twice per round, so a cached chain still grows
-            # a doubling logical tree for analysis (q_kcore_peel
-            # finding); truncation keeps each round edge-sized
-            for _ in range(20):
-                prop = (edges.join(labels, edges.src == labels.doc_id)
-                        .groupBy(F.col("dst").alias("doc_id"))
-                        .agg(F.min("cluster_id").alias("nbr_min")))
-                new = (labels.join(prop, "doc_id", "left")
-                       .select("doc_id",
-                               F.least("cluster_id",
-                                       F.coalesce("nbr_min", "cluster_id"))
-                               .alias("cluster_id"),
-                               (F.coalesce("nbr_min", "cluster_id")
-                                < F.col("cluster_id")).alias("chg"))
-                       .localCheckpoint(eager=True))
-                changed = new.where("chg").count()
-                labels = new.drop("chg")
-                if changed == 0:
-                    break
-        row = labels.agg(
-            F.count(F.lit(1)).alias("n_nodes"),
-            F.count_distinct("cluster_id").alias("n_clusters")).first()
-        collapsed = int(row.n_nodes) - int(row.n_clusters)
-    finally:
-        # sets/survivors/groups were released at the checkpoint above;
-        # loop-round checkpoint blocks go via release_caches
-        edges.unpersist()
+    # min_label_cc checkpoints the edge skeleton before the rounds,
+    # then releases the funnel's caches: a merely persisted edges
+    # relation would keep the ENTIRE funnel DAG (shingle pipeline,
+    # suffix bitmaps, verification joins) in its lineage, and every
+    # CC round would re-ANALYZE that tree before the cache lookup
+    # could hit (measured ~11 s of the funnel's ~17 s warm wall at
+    # sf0.1 for a 482-edge graph).
+    labels = min_label_cc(spark, near,
+                          release=(sets, sh, survivors, groups))
+    row = labels.agg(
+        F.count(F.lit(1)).alias("n_nodes"),
+        F.count_distinct("cluster_id").alias("n_clusters")).first()
+    collapsed = int(row.n_nodes) - int(row.n_clusters)
     n2 = n1 - collapsed
     return spark.createDataFrame(
         [("ingest", n0, n0, 0),
@@ -3056,7 +2923,13 @@ def q_dedup_cluster_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked selection, so representative choice is equality-gated, not
     asserted.
     """
-    labels = q_dedup_clusters(spark, sf_dir)
+    return _cluster_reps(spark, sf_dir, q_dedup_clusters(spark, sf_dir))
+
+
+def _cluster_reps(spark: SparkSession, sf_dir: str,
+                  labels: DataFrame) -> DataFrame:
+    """Each cluster's representative (longest doc, ties to the
+    smallest doc_id) and member count, from (doc_id, cluster_id)."""
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("n_chars").cast("bigint").alias("n_chars"))
     members = labels.join(docs, "doc_id")
@@ -3085,18 +2958,5 @@ def q_dedup_cluster_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
          "identically-shaped labels relation.")
 def _q_dedup_cluster_reps_audit(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
-    labels = _q_dedup_clusters_round1(spark, sf_dir).drop("chg")
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.col("n_chars").cast("bigint").alias("n_chars"))
-    members = labels.join(docs, "doc_id")
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.col("n_chars").desc(), F.col("doc_id"))
-    ranked = members.withColumn("rn", F.row_number().over(w))
-    agg = members.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("n_members"))
-    return (ranked.where(F.col("rn") == 1)
-            .select("cluster_id", F.col("doc_id").alias("rep_doc_id"),
-                    F.col("n_chars").alias("rep_chars"))
-            .join(agg, "cluster_id")
-            .select("cluster_id", "rep_doc_id", "rep_chars", "n_members",
-                    (F.col("n_members") - 1).alias("n_removed")))
+    return _cluster_reps(
+        spark, sf_dir, _q_dedup_clusters_round1(spark, sf_dir).drop("chg"))

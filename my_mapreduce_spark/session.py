@@ -14,6 +14,7 @@ re-plans it at runtime.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -63,3 +64,21 @@ def get_spark(app_name: str = "my-mapreduce-spark", master: str | None = None,
     for key, val in _REQUIRED_CONFS.items():
         spark.conf.set(key, val)
     return spark
+
+
+@contextlib.contextmanager
+def scoped_shuffle(spark: SparkSession, env: str):
+    """Set ``spark.sql.shuffle.partitions`` to ``$env`` (default 8)
+    for the block and restore the old value after.
+
+    For work whose shuffles move relations far smaller than the data
+    that produced them (CC rounds over a pairs graph, availableNow
+    micro-batches): a corpus-sized width there buys only per-task
+    scheduling overhead."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   os.environ.get(env, "8"))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)

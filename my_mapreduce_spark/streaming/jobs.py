@@ -23,6 +23,7 @@ from my_mapreduce_spark.io import (_ensure_runtime_confs, load_table,
                                    normalize_event_ts)
 from my_mapreduce_spark.registry import (CapturedPlan, register,
                                          register_audit_plan)
+from my_mapreduce_spark.session import scoped_shuffle
 
 
 def capture_last_microbatch(spark: SparkSession, query) -> CapturedPlan:
@@ -66,20 +67,13 @@ def _run_to_memory(spark: SparkSession, out: DataFrame, prefix: str,
     production stream sizes this to state volume instead (and a
     checkpoint pins it); these memory-sink runs are checkpoint-free.
     """
-    import os
-
-    n_parts = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n_parts)
-    try:
+    with scoped_shuffle(spark, "SPARK_GRAFT_STREAM_SHUFFLE"):
         sink = f"{prefix}_{uuid.uuid4().hex[:8]}"
         query = (out.writeStream.format("memory").queryName(sink)
                  .outputMode(mode).trigger(availableNow=True).start())
         query.awaitTermination()
         if _capture is not None:  # audit seam: last micro-batch plan
             _capture.append(capture_last_microbatch(spark, query))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     # localCheckpoint (eager) pins the sink rows as executor-side
     # blocks so the result outlives the temp view drop — no pandas
     # round-trip through the driver, no dtype coercion seams (the
@@ -750,20 +744,17 @@ def run_near_dup_stream(spark: SparkSession, sf_dir: str):
     """
     import glob as globmod
     import os
-    import shutil
     import tempfile
 
     _ensure_runtime_confs(spark)
-    # same scoping as _run_memory_sink: 4 tiny micro-batches never
+    # same scoping as _run_to_memory: 4 tiny micro-batches never
     # amortize 32 near-empty shuffle partitions per merge step
-    n_parts = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n_parts)
-    work = tempfile.mkdtemp(prefix="mmr_neardup_stream_")
-    src_dir = os.path.join(work, "src")
-    index = os.path.join(work, "index")
-    pairs = os.path.join(work, "pairs")
-    try:
+    with (scoped_shuffle(spark, "SPARK_GRAFT_STREAM_SHUFFLE"),
+          tempfile.TemporaryDirectory(prefix="mmr_neardup_stream_",
+                                      ignore_cleanup_errors=True) as work):
+        src_dir = os.path.join(work, "src")
+        index = os.path.join(work, "index")
+        pairs = os.path.join(work, "pairs")
         # 3 micro-batches: within-batch AND cross-batch pairs both
         # exercised. Wall-clock at toy sf is dominated by per-batch
         # FIXED cost (~5 s of job scheduling per merge on local[32]),
@@ -798,9 +789,6 @@ def run_near_dup_stream(spark: SparkSession, sf_dir: str):
                 [], "doc_a long, doc_b long, n_matches long, "
                     "est_jaccard double")
         return out, len(n_batches)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _neardup_stream_oracle() -> str:

@@ -1,9 +1,10 @@
 """python -m my_mapreduce_spark — the reference's run surface
 (mrcoordinator + mrworker + plugin in one process). Golden check: on
-the reference's own Project Gutenberg inputs, the CLI's wc output
-must byte-match a sequential pure-Python run of the same app
-closures, in the reference's mr-out layout (one file per reduce
-partition, '<key> <value>' lines, keys sorted within each file)."""
+whole-file .txt inputs (fixture documents written out in the
+reference's pg-*.txt layout), the CLI's wc output must byte-match a
+sequential pure-Python run of the same app closures, in the
+reference's mr-out layout (one file per reduce partition,
+'<key> <value>' lines, keys sorted within each file)."""
 
 from __future__ import annotations
 
@@ -11,7 +12,7 @@ import collections
 import glob
 import os
 
-REF_TEXTS = "/root/reference/main"
+from tests.conftest import SF_DIR
 
 
 def _sequential_wc(paths):
@@ -28,8 +29,15 @@ def _sequential_wc(paths):
 def test_cli_wc_matches_sequential_golden(spark, tmp_path):
     from my_mapreduce_spark.__main__ import run
 
-    inputs = sorted(glob.glob(f"{REF_TEXTS}/pg-*.txt"))[:3]
-    assert len(inputs) == 3, "reference fixtures expected"
+    from my_mapreduce_spark.io import load_table
+
+    docs = (load_table(spark, SF_DIR, "documents")
+            .orderBy("doc_id").limit(3).collect())
+    inputs = []
+    for r in docs:
+        path = tmp_path / f"pg-{r.doc_id}.txt"
+        path.write_text(r.text, encoding="utf-8")
+        inputs.append(str(path))
     out = str(tmp_path / "out")
     run("wc", out, inputs, n_reduce=4, spark=spark)
 

@@ -48,6 +48,32 @@ def test_clusters_pointer_jumping_matches_diameter_walk(spark):
     assert a == b
 
 
+def _path_pairs(spark):
+    """A path graph 0 - 1 - ... - 24: one component, diameter 24."""
+    return spark.createDataFrame([(i, i + 1) for i in range(24)],
+                                 "doc_a long, doc_b long")
+
+
+def test_min_label_cc_raises_at_round_cap(spark):
+    # min-label needs diameter + 1 = 25 rounds on the path, more than
+    # the round cap: the routine must raise, not return wrong labels
+    import pytest
+
+    from my_mapreduce_spark.queries.dedup import min_label_cc
+
+    with pytest.raises(RuntimeError, match="did not converge"):
+        min_label_cc(spark, _path_pairs(spark))
+
+
+def test_min_label_cc_pointer_jump_converges_on_long_path(spark):
+    from my_mapreduce_spark.queries.dedup import (_pointer_jump_step,
+                                                  min_label_cc)
+
+    labels = min_label_cc(spark, _path_pairs(spark), _pointer_jump_step)
+    assert {(r.doc_id, r.cluster_id) for r in labels.collect()} == {
+        (i, 0) for i in range(25)}
+
+
 def test_winnowing_shared_run_shares_fingerprint(spark):
     # the winnowing guarantee: two docs sharing a run of >= 6 tokens
     # (i.e. >= 4 consecutive shingles, one full window) share at
